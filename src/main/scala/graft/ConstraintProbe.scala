@@ -19,7 +19,7 @@ object ConstraintProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.ConstraintRewriteRule.ensureRegistered(spark)
+    graft.functions.GraftFunctions.register(spark)
 
     def writeFacts(tag: String): String = {
       val d = java.nio.file.Files.createTempDirectory(s"graft_cp_$tag").toString

@@ -21,8 +21,7 @@ object FooterProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.FooterCountRewrite.install(spark)
-    graft.plans.FooterStatsRewrite.install(spark)
+    graft.functions.GraftFunctions.register(spark)
 
     def write(tag: String): String = {
       val d = java.nio.file.Files.createTempDirectory(s"graft_fp_$tag").toString

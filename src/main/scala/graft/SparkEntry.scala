@@ -465,7 +465,7 @@ object SparkEntry {
     * to this row: other driver rows over documents.parquet keep their
     * own plans. */
   private val rollupCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, graft.plans.RollupCatalog.Params)]()
+    String, (String, graft.plans.RollupParams)]()
   /** Dedicated table copies for the constraint rewrites — the rollup
     * row's scoping discipline: uniqueness is registered on COPIES so
     * no other query's plan can be affected by the catalog entry.
@@ -505,7 +505,7 @@ object SparkEntry {
     })
 
   private def rollupStore(s: SparkSession, d: String)
-      : (String, graft.plans.RollupCatalog.Params) =
+      : (String, graft.plans.RollupParams) =
     rollupCache.computeIfAbsent(d, dir => {
       val base = java.nio.file.Files.createTempDirectory("graft_rollup_base").toString
       table(s, dir, "documents")
@@ -521,9 +521,9 @@ object SparkEntry {
     * stream with exact integer cents, the summary is keyed by
     * (event_type, hour grain). One-time offline writes. */
   private val rollupTimeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, graft.plans.RollupCatalog.Params)]()
+    String, (String, graft.plans.RollupParams)]()
   private def rollupTimeStore(s: SparkSession, d: String)
-      : (String, graft.plans.RollupCatalog.Params) =
+      : (String, graft.plans.RollupParams) =
     rollupTimeCache.computeIfAbsent(d, dir => {
       val base = java.nio.file.Files.createTempDirectory("graft_rolltime_base").toString
       graft.streaming.EventPipeline.normalizeTs(table(s, dir, "events"))
@@ -797,7 +797,6 @@ object SparkEntry {
     // covered in IvfRewriteSpec).
     "sql_ann_rewrite" -> ((s, d) => {
       GraftFunctions.register(s)
-      graft.plans.IvfRewrite.install(s)
       val (path, model) = ivfEmbCache.computeIfAbsent(d, dir => {
         val (a, m) = IvfIndex.build(table(s, dir, "embeddings"), "embedding", numClusters = 8)
         val p = java.nio.file.Files.createTempDirectory("graft_ivf_emb").toString
@@ -1015,14 +1014,14 @@ object SparkEntry {
     "er_fs_weights" -> ((s, d) =>
       EntityResolution.fsWeights(s, fsModel(s, d)).orderBy("field")),
     // Naive O(n²) edit-distance SQL self-join auto-rewritten into the
-    // blocked ER subtree (third rewrite rule beside the ANN and LSH
-    // rewrites). maxDist=1 is lossless by pigeonhole on ≥16-char
-    // names, so the oracle is the EXACT naive join.
+    // blocked ER subtree (the fuzzy-join rewrite of
+    // graft.plans.GraftRules). maxDist=1 is lossless by pigeonhole on
+    // ≥16-char names, so the oracle is the EXACT naive join.
     "sql_fuzzy_join_rewrite" -> ((s, d) => {
-      import graft.plans.{FuzzyJoinCatalog, FuzzyJoinRewrite}
-      FuzzyJoinRewrite.install(s)
+      import graft.plans.{FuzzyJoinCatalog, FuzzyJoinParams}
+      GraftFunctions.register(s)
       val path = erStore(s, d)
-      FuzzyJoinCatalog.register(path, FuzzyJoinCatalog.Params(
+      FuzzyJoinCatalog.register(path, FuzzyJoinParams(
         "id", "name", blockKeyLen = 8, maxBucket = Some(1024)))
       s.sql(
         s"""SELECT a.id AS a_id, b.id AS b_id,
@@ -1031,7 +1030,7 @@ object SparkEntry {
            |  ON a.id < b.id AND levenshtein(a.name, b.name) <= 1
            |ORDER BY a_id, b_id""".stripMargin)
     }),
-    // Materialized-rollup auto-rewrite (FOURTH rewrite rule): repeated
+    // Materialized-rollup auto-rewrite: repeated
     // corpus rollups are served from a registered pre-aggregate
     // instead of rescanning the base. count/sum/min/max are
     // MERGE-CLOSED, so the naive GROUP BY re-plans as a merge
@@ -1043,14 +1042,14 @@ object SparkEntry {
     // rewrite must be semantically invisible (float sums, avg,
     // count(col), DISTINCT and non-grain predicates all REFUSE —
     // pinned by RollupRewriteSpec).
-    // SEVENTH auto-rewrite: DISTINCT over a superset of a registered
-    // unique key deletes the Aggregate — at 100 TB that is a full
-    // shuffle of every distinct row, erased by a declared constraint
-    // Spark has no metadata channel for. Plan-asserted in-row; the
-    // oracle runs the REAL DISTINCT in DuckDB, so the rewrite must be
-    // result-identical.
+    // Constraint rewrite, DISTINCT shape: DISTINCT over a superset of
+    // a registered unique key deletes the Aggregate — at 100 TB that
+    // is a full shuffle of every distinct row, erased by a declared
+    // constraint Spark has no metadata channel for. Plan-asserted
+    // in-row; the oracle runs the REAL DISTINCT in DuckDB, so the
+    // rewrite must be result-identical.
     "sql_distinct_elim_rewrite" -> ((s, d) => {
-      graft.plans.ConstraintRewriteRule.ensureRegistered(s)
+      GraftFunctions.register(s)
       val (docs, _) = constraintStore(s, d)
       val df = s.read.parquet(docs).select("doc_id", "lang", "source")
         .distinct()
@@ -1059,12 +1058,12 @@ object SparkEntry {
       }.isEmpty, "distinct elimination did not fire")
       df.orderBy("doc_id")
     }),
-    // EIGHTH auto-rewrite: a LEFT JOIN to an unreferenced unique
-    // dimension is multiplicity-preserving and is deleted — the
-    // star-schema query stops scanning the dimension entirely. The
-    // oracle executes the REAL left join in DuckDB.
+    // Constraint rewrite, left-join shape: a LEFT JOIN to an
+    // unreferenced unique dimension is multiplicity-preserving and is
+    // deleted — the star-schema query stops scanning the dimension
+    // entirely. The oracle executes the REAL left join in DuckDB.
     "sql_join_elim_rewrite" -> ((s, d) => {
-      graft.plans.ConstraintRewriteRule.ensureRegistered(s)
+      GraftFunctions.register(s)
       val (_, dim) = constraintStore(s, d)
       val l = table(s, d, "lineitem")
       val p = s.read.parquet(dim)
@@ -1077,14 +1076,14 @@ object SparkEntry {
       }.isEmpty, "join elimination did not fire")
       df.orderBy("l_returnflag")
     }),
-    // ELEVENTH auto-rewrite: INNER join to an unreferenced dimension
-    // deletes when the fk is a REGISTERED verified foreign key onto
-    // the dim's unique key — unlike the left-join case this needs
-    // containment + no-null-fk, which is exactly what the profile_ri
-    // card verifies (run the card, then register). The oracle runs
-    // the REAL inner join in DuckDB.
+    // Constraint rewrite, fk inner-join shape: INNER join to an
+    // unreferenced dimension deletes when the fk is a REGISTERED
+    // verified foreign key onto the dim's unique key — unlike the
+    // left-join case this needs containment + no-null-fk, which is
+    // exactly what the profile_ri card verifies (run the card, then
+    // register). The oracle runs the REAL inner join in DuckDB.
     "sql_fk_join_elim_rewrite" -> ((s, d) => {
-      graft.plans.ConstraintRewriteRule.ensureRegistered(s)
+      GraftFunctions.register(s)
       val (_, dim) = constraintStore(s, d)
       val facts = fkStore(s, d)
       val l = s.read.parquet(facts)
@@ -1099,8 +1098,8 @@ object SparkEntry {
       df.orderBy("l_returnflag")
     }),
     "sql_rollup_rewrite" -> ((s, d) => {
-      import graft.plans.{RollupCatalog, RollupRewrite}
-      RollupRewrite.install(s)
+      import graft.plans.RollupCatalog
+      GraftFunctions.register(s)
       val (base, params) = rollupStore(s, d)
       RollupCatalog.register(base, params)
       s.sql(
@@ -1119,8 +1118,8 @@ object SparkEntry {
     // time rollup reads |types × hours| rows, never the corpus. The
     // oracle is the same naive SQL over the raw events.
     "sql_rollup_time_rewrite" -> ((s, d) => {
-      import graft.plans.{RollupCatalog, RollupRewrite}
-      RollupRewrite.install(s)
+      import graft.plans.RollupCatalog
+      GraftFunctions.register(s)
       val (base, params) = rollupTimeStore(s, d)
       RollupCatalog.register(base, params)
       s.sql(
@@ -1792,11 +1791,10 @@ object SparkEntry {
     // the exact join; the rewrite's firing is plan-asserted in
     // SimJoinRewriteSpec.
     "sql_sim_join_rewrite" -> ((s, d) => {
-      import graft.plans.{SimJoinCatalog, SimJoinRewrite}
+      import graft.plans.{SimJoinCatalog, SimJoinParams}
       GraftFunctions.register(s)
-      SimJoinRewrite.install(s)
       val path = s"$d/embeddings.parquet"
-      SimJoinCatalog.register(path, SimJoinCatalog.Params(
+      SimJoinCatalog.register(path, SimJoinParams(
         "vec_id", "embedding", bitsPerTable = 6, nTables = 64,
         seed = 42L, maxBucket = Some(1024), minThreshold = 0.4))
       s.sql(
@@ -5519,14 +5517,14 @@ object SparkEntry {
     "text_rank_terms" -> ((s, d) =>
       TextAnalysis.textRankTerms(table(s, d, "documents"), "text",
         k = 20, minLen = 4, iters = 4)),
-    // SIXTH optimizer rewrite: a 2500-element IN list (the routine
+    // IN-set optimizer rewrite: a 2500-element IN list (the routine
     // "exclude these opted-out ids" blocklist filter) re-plans as a
     // BROADCAST set probe — result-identical exact membership, but
     // the plan carries a handle instead of re-serializing the set
     // into every stage's task binary. The oracle replays the list's
     // closed form arithmetically.
     "sql_inset_rewrite" -> ((s, d) => {
-      graft.plans.InSetBroadcastRule.install(s)
+      GraftFunctions.register(s)
       val blocked = (0 until 2500).map(i => (i * 4 + 1).toLong)
       table(s, d, "documents")
         .filter(col("doc_id").isin(blocked: _*))
@@ -5801,12 +5799,12 @@ object SparkEntry {
     // lag bigrams -> hash-aggregate counts -> per-prev probabilities.
     "events_transitions" -> ((s, d) =>
       graft.streaming.EventPipeline.typeTransitions(table(s, d, "events"))),
-    // FIFTH optimizer rewrite: count(DISTINCT x) over an HllCatalog-
+    // HLL optimizer rewrite: count(DISTINCT x) over an HllCatalog-
     // registered path re-plans as the HLL register pipeline — the one
     // OPT-IN approximate rewrite (registration is explicit consent;
     // unregistered paths keep the exact distinct aggregate). The
     // oracle replays the register arithmetic and the same rounding.
-    // NINTH optimizer rewrite: unfiltered count(*) over a REGISTERED
+    // Footer-count optimizer rewrite: unfiltered count(*) over a REGISTERED
     // parquet table answers from FOOTERS ONLY — |files| tail reads of
     // a few KB replace the table-sized data scan (the first query
     // every ingestion check runs, at 100 TB the most wasteful one).
@@ -5814,7 +5812,7 @@ object SparkEntry {
     // reader), loud failure on an unreadable footer, in-row plan
     // assertions that the rewrite fired and no data scan survived.
     "sql_count_footer_rewrite" -> ((s, d) => {
-      graft.plans.FooterCountRewrite.install(s)
+      GraftFunctions.register(s)
       val path = footerCountStore(s, d)
       graft.plans.FooterCountCatalog.register(path)
       val out = s.sql(s"SELECT count(*) AS n_docs FROM parquet.`$path`")
@@ -5825,7 +5823,7 @@ object SparkEntry {
         s"parquet data scan survived the rewrite:\n$phys")
       out
     }),
-    // TENTH optimizer rewrite: unfiltered min/max/count over a
+    // Footer-stats optimizer rewrite: unfiltered min/max/count over a
     // registered parquet table answers from COLUMN-CHUNK STATISTICS
     // in the footers — the "freshness check" queries every ingestion
     // monitor schedules (SELECT min(id), max(id), count(*)), at
@@ -5833,7 +5831,7 @@ object SparkEntry {
     // scan. INT32/INT64 only (fixed width → stats never truncated,
     // and no NaN divergence); nulls exact via null_count.
     "sql_minmax_footer_rewrite" -> ((s, d) => {
-      graft.plans.FooterStatsRewrite.install(s)
+      GraftFunctions.register(s)
       val path = footerCountStore(s, d)
       graft.plans.FooterCountCatalog.register(path)
       val out = s.sql(
@@ -5853,7 +5851,7 @@ object SparkEntry {
     // footer timestamp statistics (INT64 micros, unit VERIFIED from
     // the schema's converted_type, never assumed; INT96 refuses).
     "sql_freshness_footer_rewrite" -> ((s, d) => {
-      graft.plans.FooterStatsRewrite.install(s)
+      GraftFunctions.register(s)
       val path = footerEventsStore(s, d)
       graft.plans.FooterCountCatalog.register(path)
       val out = s.sql(
@@ -5868,7 +5866,7 @@ object SparkEntry {
       out
     }),
     "sql_hll_rewrite" -> ((s, d) => {
-      graft.plans.HllRewrite.install(s)
+      GraftFunctions.register(s)
       // dedicated table copy (the rollup row's discipline): the
       // registration stays scoped to THIS row — other driver rows
       // over documents.parquet keep their exact distinct plans.

@@ -311,10 +311,14 @@ object GraftFunctions {
     case _ => throw new IllegalArgumentException(s"$what must be an integer literal")
   }
 
-  /** Register all engine functions in the session's FunctionRegistry.
-    * Idempotent — skips names already present, so repeated calls at API
-    * entry points neither re-register nor emit replace warnings. */
+  /** Register all engine functions in the session's FunctionRegistry
+    * and append every graft plan rewrite ([[graft.plans.GraftRules]])
+    * the session lacks. Idempotent — skips names and rules already
+    * present (injected by [[GraftExtensions]] or appended by an earlier
+    * call), so repeated calls at API entry points neither re-register
+    * nor emit replace warnings. */
   def register(spark: SparkSession): Unit = {
+    registerRules(spark)
     val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, builder, usage) =>
       val ident = FunctionIdentifier(name)
@@ -327,6 +331,23 @@ object GraftFunctions {
       }
     }
   }
+
+  // Sessions known to carry every rule: the lock-free fast path for
+  // the per-request calls (weak, so a dropped session is not pinned).
+  private val rulesChecked = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
+
+  private def registerRules(spark: SparkSession): Unit =
+    if (!rulesChecked.contains(spark)) rulesChecked.synchronized {
+      val extra = spark.experimental.extraOptimizations
+      val present = extra ++ spark.sessionState.optimizer.extendedOperatorOptimizationRules
+      val toAdd = graft.plans.GraftRules.all.filterNot { case (cls, _) =>
+        present.exists(cls.isInstance) }
+      if (toAdd.nonEmpty)
+        spark.experimental.extraOptimizations = extra ++ toAdd.map(_._2(spark))
+      rulesChecked.add(spark)
+    }
 
   // ------------------------------------------------------------- Column API
 
@@ -432,7 +453,8 @@ object GraftFunctions {
 }
 
 /**
- * SparkSessionExtensions entry point so the functions can be injected via
+ * SparkSessionExtensions entry point so the functions and every graft
+ * plan rewrite ([[graft.plans.GraftRules]]) can be injected via
  * `--conf spark.sql.extensions=graft.functions.GraftExtensions` on a real
  * cluster without any imperative registration call.
  */
@@ -445,11 +467,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             "", "", "", "", "", "", "built-in"),
         builder))
     }
-    // ANN auto-rewrite: top-k vector queries over IVF-registered stores
-    // are pruned to their best clusters (graft.plans.IvfRewriteRule).
-    ext.injectOptimizerRule(s => new graft.plans.IvfRewriteRule(s))
-    // Similarity-join auto-rewrite: naive cosine self-joins over
-    // SimJoinCatalog-registered stores re-plan as banded LSH.
-    ext.injectOptimizerRule(s => new graft.plans.SimJoinRewriteRule(s))
+    graft.plans.GraftRules.all.foreach { case (_, build) => ext.injectOptimizerRule(build) }
   }
 }

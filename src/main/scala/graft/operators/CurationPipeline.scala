@@ -23,7 +23,14 @@ import org.apache.spark.sql.functions._
 object CurationPipeline {
 
   /** Surviving documents after the three gates, tagged with the stage
-    * outputs a pipeline wants to audit (quality score, fingerprint). */
+    * outputs a pipeline wants to audit (quality score, fingerprint).
+    *
+    * Output columns: `idCol`, the other input columns in order, then
+    * `quality` last. A document whose id is NULL is kept like any
+    * other: the quality gate does not read the id, exact dedup keeps
+    * one row per fingerprint (a NULL id sorts first, so it is the copy
+    * kept), and near-dup removal never pairs it (NULL compares with no
+    * id). Filter NULL ids before calling to drop them. */
   def curate(
       docs: DataFrame,
       idCol: String,

@@ -27,10 +27,10 @@ import graft.functions.GraftFunctions
  * Shape: ONE pass over the token stream. All three segmenters run per
  * DISTINCT word (two codegen kernels + the unigram packed-BIGINT DP),
  * the three per-word token counts join at the distinct-words relation
- * (zipf-small, broadcast), and a single aggregate produces every
- * metric; the three output rows are projections of that one row. At
- * 100 TB this costs one word-count-shaped scan, same as training
- * either tokenizer.
+ * (zipf-small; AQE broadcasts it while it fits), and a single
+ * aggregate produces every metric; the three output rows are
+ * projections of that one row. At 100 TB this costs one
+ * word-count-shaped scan, same as training either tokenizer.
  */
 object TokenizerCompare {
 
@@ -72,7 +72,9 @@ object TokenizerCompare {
     // The three output rows are projections of this ONE bounded row;
     // checkpointing it keeps the union from deriving the whole
     // segmenter subtree once per tokenizer (3× plan + 3× execution).
-    val one = wc.join(broadcast(seg), "word")
+    // No broadcast hint: AQE's size threshold picks the join strategy
+    // (the vocab-sized segmentation side still broadcasts at sf0.1).
+    val one = wc.join(seg, "word")
       .agg(sum(col("__wc")).as("nw"),
         sum(octet_length(col("word")).cast("long") * col("__wc")).as("nb"),
         sum(col("__bpe_n") * col("__wc")).as("t_bpe"),

@@ -6,9 +6,7 @@ import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-
-import scala.collection.concurrent.TrieMap
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 /**
  * Declared-constraint catalog: UNIQUE keys for registered base
@@ -23,21 +21,16 @@ import scala.collection.concurrent.TrieMap
  * and the catalog asserts the DATA property.
  */
 object ConstraintCatalog {
-  private val keys = TrieMap.empty[String, Seq[Seq[String]]]
-  private val fks = TrieMap.empty[(String, String), (String, String)]
-
-  private[plans] def normalize(p: String): String =
-    p.stripSuffix("/").replaceFirst("^file:", "")
+  /** Table path -> its declared unique keys. */
+  private[plans] val keys = new PathRegistry[Seq[Seq[String]]]
+  /** Child table path -> fk column -> (normalized parent path, pk column). */
+  private[plans] val fks = new PathRegistry[Map[String, (String, String)]]
 
   /** Declare `cols` a unique key of the table at `path`. */
   def registerUnique(path: String, cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "a unique key needs at least one column")
-    val n = normalize(path)
-    keys.updateWith(n)(old => Some(old.getOrElse(Nil) :+ cols))
+    keys.update(path)(old => old.getOrElse(Nil) :+ cols)
   }
-
-  def uniqueKeysFor(path: String): Seq[Seq[String]] =
-    keys.getOrElse(normalize(path), Nil)
 
   /** Declare the VERIFIED foreign key `childPath.fkCol ⊆
     * parentPath.pkCol` with fkCol containing no NULLs — exactly the
@@ -48,19 +41,15 @@ object ConstraintCatalog {
     * assertion is what makes deletion lossless. */
   def registerForeignKey(childPath: String, fkCol: String,
       parentPath: String, pkCol: String): Unit =
-    fks.put((normalize(childPath), fkCol),
-      (normalize(parentPath), pkCol))
+    fks.update(childPath)(old => old.getOrElse(Map.empty) +
+      (fkCol -> (PathRegistry.normalize(parentPath), pkCol)))
 
-  def foreignKeyFor(childPath: String, fkCol: String)
-      : Option[(String, String)] =
-    fks.get((normalize(childPath), fkCol))
-
-  def clear(): Unit = { keys.clear(); fks.clear() }
+  def isEmpty: Boolean = keys.isEmpty && fks.isEmpty
 }
 
 /**
- * Catalyst rule — the SEVENTH and EIGHTH auto-rewrites, both driven
- * by [[ConstraintCatalog]] unique keys:
+ * Catalyst rule (one of the nine [[GraftRules]]) with three
+ * constraint-driven shapes, all licensed by [[ConstraintCatalog]]:
  *
  *  1. **DISTINCT elimination**: `SELECT DISTINCT ...` lowers to an
  *     Aggregate whose grouping IS its output; when the grouped
@@ -82,7 +71,9 @@ object ConstraintCatalog {
  *     still one row). Star-schema queries that project only fact
  *     columns stop scanning the dimension entirely.
  *
- * Both rewrites replace a plan node with a strictly smaller one over
+ *  3. **Fk inner-join elimination** (see `innerJoinIsNoOp`).
+ *
+ * All three replace a plan node with a strictly smaller one over
  * the SAME output attributes (exprIds preserved), so they compose
  * with everything downstream. Plans with zero registered tables are
  * untouched.
@@ -91,21 +82,19 @@ class ConstraintRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private val rewritten = TreeNodeTag[Boolean]("graft.constraint.checked")
 
-  /** Walk Filters and attribute-only Projects down to a single
-    * HadoopFsRelation scan; returns the scan path and the name in the
-    * SCAN of each attribute that survives the chain (exprIds are
-    * stable through Project-of-attributes, so names are too). */
-  private def scanThrough(plan: LogicalPlan): Option[String] = plan match {
+  /** Walk Filters and attribute-only Projects down to a single scan
+    * (exprIds are stable through Project-of-attributes, so attribute
+    * names are the scan's names). */
+  private def scanThrough(plan: LogicalPlan): Option[LogicalRelation] = plan match {
     case Project(projectList, child) if projectList.forall(_.isInstanceOf[AttributeReference]) =>
       scanThrough(child)
     case Filter(_, child) => scanThrough(child)
-    case lr: LogicalRelation =>
-      lr.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.headOption.map(_.toString)
-        case _ => None
-      }
+    case lr: LogicalRelation => Some(lr)
     case _ => None
   }
+
+  private def uniqueKeysOf(scan: LogicalRelation): Seq[Seq[String]] =
+    ConstraintCatalog.keys.lookup(scan).getOrElse(Nil)
 
   private def distinctElim(agg: Aggregate): Option[LogicalPlan] = {
     val groupAttrs = agg.groupingExpressions.flatMap {
@@ -121,10 +110,9 @@ class ConstraintRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (outAttrs.length != agg.aggregateExpressions.length) return None
     if (outAttrs.map(_.exprId).toSet != groupAttrs.map(_.exprId).toSet) return None
     for {
-      path <- scanThrough(agg.child)
+      scan <- scanThrough(agg.child)
       names = groupAttrs.map(_.name).toSet
-      _ <- ConstraintCatalog.uniqueKeysFor(path)
-        .find(key => key.toSet.subsetOf(names))
+      _ <- uniqueKeysOf(scan).find(key => key.toSet.subsetOf(names))
     } yield Project(outAttrs, agg.child)
   }
 
@@ -145,12 +133,12 @@ class ConstraintRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       rk <- keyAttr
       // nothing from the right side referenced above the join
       if parentRefs.subsetOf(left.outputSet)
-      path <- scanThrough(right)
-      if ConstraintCatalog.uniqueKeysFor(path).contains(Seq(rk.name))
+      scan <- scanThrough(right)
+      if uniqueKeysOf(scan).contains(Seq(rk.name))
     } yield true).getOrElse(false)
   }
 
-  /** The NINTH constraint shape (eleventh rewrite overall): an INNER
+  /** The third constraint shape: an INNER
     * join `child ⋈ parent ON fk = pk` where nothing from the parent is
     * referenced, `pk` is a registered unique key, and (childPath,
     * fk) → (parentPath, pk) is a REGISTERED verified foreign key —
@@ -165,18 +153,13 @@ class ConstraintRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // this rule runs; dropping null-pk parent rows can never drop a
     // match (equality never matches NULL), so exactly that filter —
     // on the JOIN KEY only — is admissible on the parent side.
-    def bareScan(p: LogicalPlan, pk: AttributeReference): Option[String] =
+    def bareScan(p: LogicalPlan, pk: AttributeReference): Option[LogicalRelation] =
       p match {
         case Project(pl, c)
             if pl.forall(_.isInstanceOf[AttributeReference]) =>
           bareScan(c, pk)
         case Filter(fc, c) if onlyNotNullOf(fc, pk) => bareScan(c, pk)
-        case lr: LogicalRelation =>
-          lr.relation match {
-            case fs: HadoopFsRelation =>
-              fs.location.rootPaths.headOption.map(_.toString)
-            case _ => None
-          }
+        case lr: LogicalRelation => Some(lr)
         case _ => None
       }
     val pair = cond.flatMap {
@@ -191,11 +174,12 @@ class ConstraintRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     (for {
       (fk, pk) <- pair
       if parentRefs.subsetOf(left.outputSet)
-      rPath <- bareScan(right, pk)
-      if ConstraintCatalog.uniqueKeysFor(rPath).contains(Seq(pk.name))
-      lPath <- scanThrough(left)
-      (pPath, pCol) <- ConstraintCatalog.foreignKeyFor(lPath, fk.name)
-      if pPath == ConstraintCatalog.normalize(rPath) && pCol == pk.name
+      parent <- bareScan(right, pk)
+      if uniqueKeysOf(parent).contains(Seq(pk.name))
+      child <- scanThrough(left)
+      (pPath, pCol) <- ConstraintCatalog.fks.lookup(child).flatMap(_.get(fk.name))
+      if PathRegistry.rootsOf(parent).map(PathRegistry.normalize) == Seq(pPath) &&
+        pCol == pk.name
     } yield true).getOrElse(false)
   }
 
@@ -207,7 +191,8 @@ class ConstraintRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => false
     }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (ConstraintCatalog.isEmpty) plan else plan.transformDown {
     case p @ Project(_, j @ Join(left, _, LeftOuter, Some(_), _))
         if p.getTagValue(rewritten).isEmpty =>
       p.setTagValue(rewritten, true)
@@ -230,16 +215,5 @@ class ConstraintRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case agg: Aggregate if agg.getTagValue(rewritten).isEmpty =>
       agg.setTagValue(rewritten, true)
       distinctElim(agg).getOrElse(agg)
-  }
-}
-
-object ConstraintRewriteRule {
-  /** Idempotently append the rule to the session's extra optimizer
-    * rules (the [[IvfRewriteRule.ensureRegistered]] convention). */
-  def ensureRegistered(spark: SparkSession): Unit = synchronized {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[ConstraintRewriteRule]))
-      spark.experimental.extraOptimizations =
-        existing :+ new ConstraintRewriteRule(spark)
   }
 }

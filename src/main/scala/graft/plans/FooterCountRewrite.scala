@@ -11,9 +11,10 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 
 /**
- * Catalyst rule: an unfiltered `count(*)` over a REGISTERED parquet
- * table re-plans as a FOOTER-ONLY job — the ninth auto-rewrite. Every
- * parquet footer already carries the file's exact `num_rows`
+ * Catalyst rule (one of the nine [[GraftRules]]): an unfiltered
+ * `count(*)` over a REGISTERED parquet table re-plans as a
+ * FOOTER-ONLY job. Every parquet footer already carries the file's
+ * exact `num_rows`
  * ([[graft.sources.ParquetFooter]], the from-scratch thrift reader the
  * footer-census row cross-validated against parquet-mr), so the
  * table-sized scan collapses to |files| tail reads of a few KB each.
@@ -51,16 +52,26 @@ import org.apache.spark.sql.functions._
  * filtered counts), `count(col)` (null semantics), `count(DISTINCT)`,
  * grouping, joins, several aggregates — refuses and keeps the scan.
  */
-object FooterCountCatalog {
-  private val registered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
+object FooterCountCatalog extends PathRegistry[Unit] {
   /** Assert the footer-count contract for this parquet directory. */
-  def register(path: String): Unit = registered.add(norm(path))
-  def deregister(path: String): Unit = registered.remove(norm(path))
-  def contains(path: String): Boolean = registered.contains(norm(path))
-  private def norm(p: String): String =
-    p.stripSuffix("/").replaceFirst("^file:", "")
+  def register(path: String): Unit = register(path, ())
+
+  /** The registered parquet relation a Project-of-attributes chain
+    * reads; a Filter anywhere refuses (footers can't answer filtered
+    * aggregates). Shared by [[FooterCountRule]] and [[FooterStatsRule]]. */
+  private[plans] def scanOf(plan: LogicalPlan): Option[HadoopFsRelation] =
+    plan match {
+      case Project(pl, child)
+          if pl.forall(_.isInstanceOf[AttributeReference]) =>
+        scanOf(child)
+      case lr: LogicalRelation if lookup(lr).isDefined =>
+        lr.relation match {
+          case fs: HadoopFsRelation
+              if fs.fileFormat.isInstanceOf[ParquetFileFormat] => Some(fs)
+          case _ => None
+        }
+      case _ => None
+    }
 }
 
 object FooterCountRewrite {
@@ -103,41 +114,11 @@ object FooterCountRewrite {
       } finally in.close()
     } catch { case scala.util.control.NonFatal(_) => None }
   }
-
-  /** Install the rewrite rule into a session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[FooterCountRule])) {
-      spark.experimental.extraOptimizations =
-        existing :+ new FooterCountRule(spark)
-    }
-  }
 }
 
 class FooterCountRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private val rewritten = TreeNodeTag[Boolean]("graft.footercount.rewritten")
-
-  /** Project-of-attributes chains over one registered parquet
-    * relation; a Filter anywhere refuses (footer counts can't answer
-    * filtered counts). */
-  private def strip(plan: LogicalPlan): Option[HadoopFsRelation] =
-    plan match {
-      case Project(pl, child)
-          if pl.forall(_.isInstanceOf[AttributeReference]) =>
-        strip(child)
-      case lr: LogicalRelation =>
-        lr.relation match {
-          case fs: HadoopFsRelation
-              if fs.fileFormat.isInstanceOf[ParquetFileFormat] &&
-                fs.location.rootPaths.nonEmpty &&
-                fs.location.rootPaths.forall(p =>
-                  FooterCountCatalog.contains(p.toString)) =>
-            Some(fs)
-          case _ => None
-        }
-      case _ => None
-    }
 
   /** `count(*)` analyzes to `count(1)`; accept any non-null literal,
     * refuse DISTINCT / FILTER / count(col). */
@@ -147,11 +128,12 @@ class FooterCountRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (FooterCountCatalog.isEmpty) plan else plan.transformDown {
     case agg @ Aggregate(Seq(), Seq(al @ Alias(ae: AggregateExpression, name)),
         child, _)
         if agg.getTagValue(rewritten).isEmpty && isCountStar(ae) =>
-      strip(child) match {
+      FooterCountCatalog.scanOf(child) match {
         case Some(rel) =>
           val files = rel.location.inputFiles.toSeq
           import spark.implicits._

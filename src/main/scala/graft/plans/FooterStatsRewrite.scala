@@ -6,16 +6,14 @@ import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /**
  * Catalyst rule: unfiltered `min(x)` / `max(x)` / `count(*)` over a
  * REGISTERED parquet table answer from COLUMN-CHUNK STATISTICS — the
- * tenth auto-rewrite, the footer-count rule's ([[FooterCountRule]])
- * generalization. Every parquet column chunk records exact
+ * footer-count rule's ([[FooterCountRule]]) generalization, one of the
+ * nine [[GraftRules]]. Every parquet column chunk records exact
  * `min_value`/`max_value`/`null_count` in the footer
  * ([[graft.sources.ParquetFooter.ColumnStats]]); min over the table is
  * the min of chunk minima, so the table-sized scan collapses to
@@ -135,38 +133,11 @@ object FooterStatsRewrite {
       org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp(v)
     case _ => v
   }
-
-  /** Install the rewrite rule into a session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[FooterStatsRule])) {
-      spark.experimental.extraOptimizations =
-        existing :+ new FooterStatsRule(spark)
-    }
-  }
 }
 
 class FooterStatsRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private val rewritten = TreeNodeTag[Boolean]("graft.footerstats.rewritten")
-
-  private def strip(plan: LogicalPlan): Option[HadoopFsRelation] =
-    plan match {
-      case Project(pl, child)
-          if pl.forall(_.isInstanceOf[AttributeReference]) =>
-        strip(child)
-      case lr: LogicalRelation =>
-        lr.relation match {
-          case fs: HadoopFsRelation
-              if fs.fileFormat.isInstanceOf[ParquetFileFormat] &&
-                fs.location.rootPaths.nonEmpty &&
-                fs.location.rootPaths.forall(p =>
-                  FooterCountCatalog.contains(p.toString)) =>
-            Some(fs)
-          case _ => None
-        }
-      case _ => None
-    }
 
   private sealed trait Item
   private case object CountStar extends Item
@@ -197,7 +168,8 @@ class FooterStatsRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (FooterCountCatalog.isEmpty) plan else plan.transformDown {
     case agg @ Aggregate(Seq(), resultExprs, child, _)
         if agg.getTagValue(rewritten).isEmpty && resultExprs.nonEmpty &&
           resultExprs.exists {
@@ -211,7 +183,7 @@ class FooterStatsRule(spark: SparkSession) extends Rule[LogicalPlan] {
         case _ => None
       }
       val replaced = for {
-        rel <- strip(child)
+        rel <- FooterCountCatalog.scanOf(child)
         items <- Some(classified).filter(_.forall(_.isDefined))
           .map(_.map(_.get))
       } yield {

@@ -7,14 +7,21 @@ import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+
+final case class FuzzyJoinParams(
+    idCol: String, nameCol: String,
+    blockKeyLen: Int, maxBucket: Option[Int],
+    maxExactDist: Int = 1)
+
+object FuzzyJoinCatalog extends PathRegistry[FuzzyJoinParams]
 
 /**
  * Catalyst rule: a declarative edit-distance SELF-JOIN over a
  * registered string store re-plans as the blocked
- * [[EntityResolution.fuzzyPairs]] subtree — the third member of the
- * auto-rewrite family ([[IvfRewriteRule]] for top-k ANN,
- * [[SimJoinRewriteRule]] for cosine-threshold joins). The naive SQL
+ * [[EntityResolution.fuzzyPairs]] subtree — one of the nine
+ * [[GraftRules]], beside [[IvfRewriteRule]] for top-k ANN and
+ * [[SimJoinRewriteRule]] for cosine-threshold joins. The naive SQL
  *
  *   SELECT a.id AS a_id, b.id AS b_id, levenshtein(a.name, b.name) AS dist
  *   FROM store a JOIN store b
@@ -35,24 +42,6 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
  * rule refuses rather than silently dropping pairs, and the query
  * falls back to the exact join.
  */
-object FuzzyJoinCatalog {
-  final case class Params(
-      idCol: String, nameCol: String,
-      blockKeyLen: Int, maxBucket: Option[Int],
-      maxExactDist: Int = 1)
-
-  private val entries =
-    new java.util.concurrent.ConcurrentHashMap[String, Params]()
-
-  def register(path: String, params: Params): Unit =
-    entries.put(normalize(path), params)
-  def unregister(path: String): Unit = entries.remove(normalize(path))
-  def lookup(path: String): Option[Params] = Option(entries.get(normalize(path)))
-
-  private def normalize(p: String): String =
-    p.stripSuffix("/").replaceFirst("^file:", "")
-}
-
 class FuzzyJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private val rewritten = TreeNodeTag[Boolean]("graft.fuzzyjoin.rewritten")
@@ -75,28 +64,26 @@ class FuzzyJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     } yield (lt, lev, d)
   }
 
+  /** The unique registered scan under `plan`: its root paths and entry. */
   private def relationOf(plan: LogicalPlan)
-      : Option[(LogicalRelation, String)] = {
+      : Option[(Seq[String], FuzzyJoinParams)] = {
     val rels = plan.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          fs.location.rootPaths.headOption.map(p => lr -> p.toString)
-        case _ => None
-      }
+      case lr: LogicalRelation =>
+        FuzzyJoinCatalog.lookup(lr).map(PathRegistry.rootsOf(lr) -> _)
     }.flatten
     if (rels.length == 1) rels.headOption else None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (FuzzyJoinCatalog.isEmpty) plan else plan.transformDown {
     case proj @ Project(projectList,
         Join(l, r, Inner, Some(cond), _))
         if proj.getTagValue(rewritten).isEmpty && projectList.length == 3 =>
       val replaced = for {
         (lt, lev, maxDist) <- splitCondition(cond)
-        (_, lPath) <- relationOf(l)
-        (_, rPath) <- relationOf(r)
-        if lPath == rPath
-        params <- FuzzyJoinCatalog.lookup(lPath)
+        (lPaths, params) <- relationOf(l)
+        (rPaths, _) <- relationOf(r)
+        if lPaths == rPaths
         // exactness contract: only thresholds the blocking is lossless for
         if maxDist >= 0 && maxDist <= params.maxExactDist
         ltL = lt.left.asInstanceOf[AttributeReference]
@@ -120,7 +107,7 @@ class FuzzyJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           case _ => None
         }
       } yield {
-        val base = spark.read.parquet(lPath)
+        val base = spark.read.parquet(lPaths: _*)
         val pairs = EntityResolution.fuzzyPairs(
             base, params.idCol, params.nameCol, maxDist,
             params.blockKeyLen, params.maxBucket)
@@ -136,16 +123,5 @@ class FuzzyJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         renamed
       }
       replaced.getOrElse(proj)
-  }
-}
-
-object FuzzyJoinRewrite {
-  /** Install the rewrite rule into a session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[FuzzyJoinRewriteRule])) {
-      spark.experimental.extraOptimizations =
-        existing :+ new FuzzyJoinRewriteRule(spark)
-    }
   }
 }

@@ -6,16 +6,15 @@ import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types._
 
 /**
  * Catalyst rule: `count(DISTINCT x)` over a REGISTERED table re-plans
- * as the HyperLogLog register pipeline — the fifth auto-rewrite
- * beside ANN top-k, LSH similarity joins, blocked fuzzy joins, and
- * materialized rollups. Registration ([[HllCatalog.register]]) is the
+ * as the HyperLogLog register pipeline — one of the nine
+ * [[GraftRules]]. Registration ([[HllCatalog.register]]) is the
  * user's EXPLICIT consent to an approximate answer: unlike the other
- * four rewrites this one changes results, so it must never fire
+ * rewrites this one changes results, so it must never fire
  * implicitly — an unregistered path always keeps Spark's exact
  * expand + two-phase distinct aggregate. Accuracy: σ ≈ 1.04/√256 ≈
  * 6.5% in the mid range; below 2.5·m the estimator switches to the
@@ -51,16 +50,9 @@ import org.apache.spark.sql.types._
  * the SQL oracle's replay), and est the raw harmonic-mean estimate
  * rounded to the column's BIGINT contract.
  */
-object HllCatalog {
-  private val registered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
+object HllCatalog extends PathRegistry[Unit] {
   /** Opt this parquet path's distinct-counts into HLL approximation. */
-  def register(path: String): Unit = registered.add(norm(path))
-  def deregister(path: String): Unit = registered.remove(norm(path))
-  def contains(path: String): Boolean = registered.contains(norm(path))
-  private def norm(p: String): String =
-    p.stripSuffix("/").replaceFirst("^file:", "")
+  def register(path: String): Unit = register(path, ())
 }
 
 class HllRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
@@ -74,14 +66,8 @@ class HllRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case p @ Project(pl, child)
           if pl.forall(_.isInstanceOf[AttributeReference]) =>
         strip(child).map { case (cs, base) => (cs, base) }
-      case lr: LogicalRelation =>
-        lr.relation match {
-          case fs: HadoopFsRelation
-              if fs.location.rootPaths.headOption
-                .exists(p => HllCatalog.contains(p.toString)) =>
-            Some((Nil, lr))
-          case _ => None
-        }
+      case lr: LogicalRelation if HllCatalog.lookup(lr).isDefined =>
+        Some((Nil, lr))
       case _ => None
     }
 
@@ -109,7 +95,8 @@ class HllRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       Add(Add(Multiply(zn, lit(4)), inNibble), lit(1)))
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (HllCatalog.isEmpty) plan else plan.transformDown {
     case agg @ Aggregate(groupExprs, resultExprs, child, _)
         if agg.getTagValue(rewritten).isEmpty =>
       val replaced = for {
@@ -187,16 +174,5 @@ class HllRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         out
       }
       replaced.getOrElse(agg)
-  }
-}
-
-object HllRewrite {
-  /** Install the rewrite rule into a session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[HllRewriteRule])) {
-      spark.experimental.extraOptimizations =
-        existing :+ new HllRewriteRule(spark)
-    }
   }
 }

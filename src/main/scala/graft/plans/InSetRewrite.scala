@@ -1,15 +1,18 @@
 package graft.plans
 
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.INSET
 import org.apache.spark.sql.types.{BooleanType, DataType}
 
 /**
- * The SIXTH optimizer rewrite: a large `IN (v1, …, vN)` membership
+ * Optimizer rewrite: a large `IN (v1, …, vN)` membership
  * test re-plans as a BROADCAST set probe. Spark folds big IN lists to
  * `InSet` — a hash set embedded IN THE EXPRESSION — so a 100k-id
  * blocklist filter (the routine "exclude these opted-out/contaminated
@@ -62,53 +65,14 @@ object InSetBroadcast {
 class InSetBroadcastRule(spark: SparkSession) extends Rule[LogicalPlan] {
   import InSetBroadcast._
 
-  // The optimizer re-runs per action/DataFrame, and the same IN list
-  // (a fixed blocklist) recurs across queries in a session — without
-  // a cache every pass would mint a new never-destroyed broadcast
-  // (driver+executor memory growing per query). Key by content hash,
-  // verify by full equality on hit (hash collisions must not alias
-  // different lists). Eviction is wholesale AND RECLAIMS: dropped
-  // entries' Broadcasts are destroyed (the r9 ADVICE leak — clear()
-  // alone pinned every generation's blobs forever). A plan optimized
-  // before an eviction and executed after it must be re-planned; one
-  // generation of ≤64 lists is always safe.
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    Int, (Set[Any], org.apache.spark.broadcast.Broadcast[java.util.HashSet[Any]])]()
-
-  private def broadcastFor(
-      hset: Set[Any]): org.apache.spark.broadcast.Broadcast[java.util.HashSet[Any]] = {
-    val key = hset.##
-    val hit = cache.get(key)
-    if (hit != null && hit._1 == hset) hit._2
-    else {
-      val set = new java.util.HashSet[Any](hset.size * 2)
-      hset.foreach(v => set.add(v))
-      val bc = spark.sparkContext.broadcast(set)
-      if (cache.size > 64) evictAll()
-      cache.put(key, (hset, bc))
-      bc
-    }
-  }
-
-  /** Destroy every cached broadcast and empty the cache. */
-  private[graft] def evictAll(): Unit = {
-    val it = cache.values().iterator()
-    while (it.hasNext) {
-      val bc = it.next()._2
-      try bc.destroy()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    cache.clear()
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
+    plan.transformAllExpressionsWithPruning(_.containsPattern(INSET)) {
       // a null IN the list makes non-matches evaluate to NULL (three-
       // valued IN); the set probe returns false — refuse that shape
       case InSet(child, hset)
           if hset.size >= InSetBroadcastRule.Threshold &&
             !hset.contains(null) =>
-        InSetBroadcastExpr(broadcastFor(hset), child)
+        InSetBroadcastExpr(InSetBroadcastRule.broadcastFor(spark, hset), child)
     }
 }
 
@@ -116,12 +80,48 @@ object InSetBroadcastRule {
   /** Below this, the inline InSet is cheaper than a broadcast fetch. */
   val Threshold = 1000
 
-  /** Install into a session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[InSetBroadcastRule])) {
-      spark.experimental.extraOptimizations =
-        existing :+ new InSetBroadcastRule(spark)
+  // The optimizer re-runs per action/DataFrame, and the same IN list
+  // (a fixed blocklist) recurs across queries — without a cache every
+  // pass would mint a new never-destroyed broadcast (driver+executor
+  // memory growing per query). The cache is shared by every rule
+  // instance because a session built with `spark.sql.extensions` gets
+  // a fresh instance per optimizer run. Key by content hash, verify by
+  // full equality and by SparkContext on hit (hash collisions must not
+  // alias different lists; a stopped context's broadcasts are dead).
+  // Eviction is wholesale AND RECLAIMS: dropped entries' Broadcasts are
+  // unpersisted (executor copies freed at once) and the cache drops its
+  // reference, so Spark's ContextCleaner removes the driver copy once
+  // no plan holds the Broadcast any more (clear() alone would pin every
+  // generation's executor blobs). Never destroy(): the cache is shared
+  // by every session, and a plan another session optimized before the
+  // eviction must still execute after it.
+  private final case class Cached(
+      sc: SparkContext, set: Set[Any], bc: Broadcast[java.util.HashSet[Any]])
+  private val cache = new java.util.concurrent.ConcurrentHashMap[Int, Cached]()
+
+  private def broadcastFor(
+      spark: SparkSession, hset: Set[Any]): Broadcast[java.util.HashSet[Any]] = {
+    val key = hset.##
+    val hit = cache.get(key)
+    if (hit != null && (hit.sc eq spark.sparkContext) && hit.set == hset) hit.bc
+    else {
+      val set = new java.util.HashSet[Any](hset.size * 2)
+      hset.foreach(v => set.add(v))
+      val bc = spark.sparkContext.broadcast(set)
+      if (cache.size > 64) evictAll()
+      cache.put(key, Cached(spark.sparkContext, hset, bc))
+      bc
     }
+  }
+
+  /** Unpersist every cached broadcast and empty the cache. */
+  private[graft] def evictAll(): Unit = {
+    val it = cache.values().iterator()
+    while (it.hasNext) {
+      val bc = it.next().bc
+      try bc.unpersist()
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
+    cache.clear()
   }
 }

@@ -8,51 +8,43 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{ArrayType, FloatType}
+
+final case class IvfEntry(model: IvfIndex.IvfModel, searchTopSize: Int)
+
+object IvfIndexCatalog extends PathRegistry[IvfEntry] {
+  /** Register an indexed store by its root path (as written by
+    * [[IvfIndex.writePartitioned]]). */
+  def register(path: String, model: IvfIndex.IvfModel, searchTopSize: Int): Unit =
+    register(path, IvfEntry(model, searchTopSize))
+}
 
 /**
  * Catalyst optimizer rule that turns a plain declarative top-k vector
  * query over an IVF-indexed store into the cluster-pruned ANN plan —
  * the Spark-native analogue of the reference's `VIEW {index}` hint
- * (reference: /root/reference/app.py:193-196): there the user opts into
- * the index per query; here the optimizer applies it automatically when
- * the store is registered as indexed.
+ * (the reference `app.py:193-196`): there the user opts into the index
+ * per query; here every graft session carries this rule
+ * ([[GraftRules]]) and it fires only for a store registered in
+ * [[IvfIndexCatalog]].
  *
  *   SELECT ..., knn_cosine_similarity(embedding, <literal vec>) AS score
  *   FROM indexed_store ORDER BY score DESC LIMIT k
  *
  * matches GlobalLimit(LocalLimit(Sort(Project(..., scan)))) where the
- * sort key is a distance expression over a literal query vector and the
- * scan's root path is registered in [[IvfIndexCatalog]]. The rewrite
- * injects `cluster_id IN (<top searchTopSize centroids>)` directly above
- * the relation; on a store written `partitionBy(cluster_id)` that filter
- * becomes Parquet partition pruning — the 100 TB search path, now
- * reachable from unmodified SQL.
+ * sort key is a distance expression over a literal query vector and
+ * every root path of the scan is registered to one [[IvfIndexCatalog]]
+ * entry. The rewrite injects `cluster_id IN (<top searchTopSize
+ * centroids>)` directly above the relation; on a store written
+ * `partitionBy(cluster_id)` that filter becomes Parquet partition
+ * pruning — the 100 TB search path, now reachable from unmodified SQL.
  *
  * Conservative by design: the sort direction must match the metric's
  * suffix rule, the sort must be the score alone (the id tie-break is
  * added by the engine API, not required here), and an already-rewritten
  * subtree (tag) is never rewritten again.
  */
-object IvfIndexCatalog {
-  final case class Entry(model: IvfIndex.IvfModel, searchTopSize: Int)
-
-  private val entries = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
-
-  /** Register an indexed store by its root path (as written by
-    * [[IvfIndex.writePartitioned]]). */
-  def register(path: String, model: IvfIndex.IvfModel, searchTopSize: Int): Unit =
-    entries.put(normalize(path), Entry(model, searchTopSize))
-
-  def unregister(path: String): Unit = entries.remove(normalize(path))
-
-  def lookup(path: String): Option[Entry] = Option(entries.get(normalize(path)))
-
-  private def normalize(p: String): String =
-    p.stripSuffix("/").replaceFirst("^file:", "")
-}
-
 class IvfRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private val rewritten = TreeNodeTag[Boolean]("graft.ivf.rewritten")
@@ -80,7 +72,8 @@ class IvfRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (IvfIndexCatalog.isEmpty) plan else plan.transformDown {
     case gl @ GlobalLimit(_, ll @ LocalLimit(_,
         srt @ Sort(SortOrder(attr: AttributeReference, direction, _, _) +: _, true,
         Project(projectList, child), _))) if gl.getTagValue(rewritten).isEmpty =>
@@ -113,31 +106,14 @@ class IvfRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       rewrittenPlan.getOrElse(gl)
   }
 
-  /** The unique LogicalRelation under `plan` whose root path is
-    * registered as an IVF store (bails out on joins — pruning one side
-    * of a join needs per-side analysis). */
+  /** The unique LogicalRelation under `plan` registered as an IVF
+    * store (bails out on joins — pruning one side of a join needs
+    * per-side analysis). */
   private def findIndexedRelation(
-      plan: LogicalPlan): Option[(LogicalRelation, IvfIndexCatalog.Entry)] = {
+      plan: LogicalPlan): Option[(LogicalRelation, IvfEntry)] = {
     val rels = plan.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          fs.location.rootPaths.flatMap(p =>
-            IvfIndexCatalog.lookup(p.toString).map(lr -> _)).headOption
-        case _ => None
-      }
+      case lr: LogicalRelation => IvfIndexCatalog.lookup(lr).map(lr -> _)
     }.flatten
     if (rels.length == 1) rels.headOption else None
-  }
-}
-
-object IvfRewrite {
-  /** Install the rewrite rule into a session (idempotent). Sessions
-    * built with `spark.sql.extensions=graft.functions.GraftExtensions`
-    * get it injected automatically. */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[IvfRewriteRule])) {
-      spark.experimental.extraOptimizations = existing :+ new IvfRewriteRule(spark)
-    }
   }
 }

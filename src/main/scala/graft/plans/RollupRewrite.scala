@@ -6,15 +6,80 @@ import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType}
 
 /**
+ * @param summaryPath parquet dir of the pre-aggregate
+ * @param groupCols   summary grouping columns (finest grain served)
+ * @param cntCol      summary column holding count(*) partials
+ * @param sums        base column -> summary column with sum partials
+ * @param mins        base column -> summary column with min partials
+ * @param maxs        base column -> summary column with max partials
+ * @param nns         base column -> summary column with count(col)
+ *                    (non-null) partials — serves count(c) and the
+ *                    avg(c) denominator
+ * @param timeGrains  summary column -> (base timestamp column,
+ *                    TRUNC level) where the summary column stores
+ *                    date_trunc(level, baseCol) — a query grouping
+ *                    by the SAME or a COARSER composable level is
+ *                    served by re-truncating the stored grain
+ *                    (hourly summary serves daily/monthly rollups)
+ */
+final case class RollupParams(
+    summaryPath: String,
+    groupCols: Seq[String],
+    cntCol: String,
+    sums: Map[String, String] = Map.empty,
+    mins: Map[String, String] = Map.empty,
+    maxs: Map[String, String] = Map.empty,
+    nns: Map[String, String] = Map.empty,
+    timeGrains: Map[String, (String, String)] = Map.empty)
+
+object RollupCatalog extends PathRegistry[RollupParams] {
+
+  /** Build (and write) the summary the catalog serves: one row per
+    * groupCols combination with count/sum/min/max partial states. The
+    * build is one map-side-partial hash aggregate over the base — the
+    * single full scan that all later rollup queries amortize. */
+  /** @param timeGrain optional (base ts column, trunc level, summary
+    *        column name): adds date_trunc(level, tsCol) to the
+    *        summary grain and registers it for grain-composing
+    *        queries. */
+  def buildSummary(spark: SparkSession, basePath: String,
+      summaryPath: String, groupCols: Seq[String],
+      statCols: Seq[String],
+      timeGrain: Option[(String, String, String)] = None): RollupParams = {
+    import org.apache.spark.sql.functions._
+    val base = spark.read.parquet(basePath)
+    val groupExprs = groupCols.map(col) ++
+      timeGrain.map { case (ts, lvl, out) => date_trunc(lvl, col(ts)).as(out) }
+    val aggs =
+      count(lit(1)).as("cnt") +:
+      statCols.flatMap(c => Seq(
+        sum(col(c)).as(s"sum_$c"),
+        min(col(c)).as(s"min_$c"),
+        max(col(c)).as(s"max_$c"),
+        count(col(c)).as(s"nn_$c")))
+    base.groupBy(groupExprs: _*).agg(aggs.head, aggs.tail: _*)
+      .write.mode("overwrite").parquet(summaryPath)
+    RollupParams(summaryPath, groupCols, "cnt",
+      sums = statCols.map(c => c -> s"sum_$c").toMap,
+      mins = statCols.map(c => c -> s"min_$c").toMap,
+      maxs = statCols.map(c => c -> s"max_$c").toMap,
+      nns = statCols.map(c => c -> s"nn_$c").toMap,
+      timeGrains = timeGrain.map { case (ts, lvl, out) =>
+        out -> (ts, lvl.toUpperCase(java.util.Locale.ROOT))
+      }.toMap)
+  }
+}
+
+/**
  * Catalyst rule: an aggregate over a registered base table re-plans
- * against a MATERIALIZED ROLLUP (pre-aggregated summary) — the fourth
- * member of the auto-rewrite family ([[IvfRewriteRule]] top-k ANN,
- * [[SimJoinRewriteRule]] cosine joins, [[FuzzyJoinRewriteRule]] edit
- * distance). At 100 TB this is the difference between a datacard
+ * against a MATERIALIZED ROLLUP (pre-aggregated summary) — one of the
+ * nine [[GraftRules]] beside [[IvfRewriteRule]] top-k ANN,
+ * [[SimJoinRewriteRule]] cosine joins and [[FuzzyJoinRewriteRule]] edit
+ * distance. At 100 TB this is the difference between a datacard
  * refresh that rescans the corpus and one that reads a few thousand
  * summary rows: `SELECT lang, count(*), sum(n_chars) FROM docs GROUP
  * BY lang` re-plans as a merge-aggregate over the (lang, source)
@@ -54,82 +119,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType}
  * rule asserts only the merge algebra, exactly as the fuzzy-join rule
  * asserts the pigeonhole bound but not the store's name lengths.
  */
-object RollupCatalog {
-  /**
-   * @param summaryPath parquet dir of the pre-aggregate
-   * @param groupCols   summary grouping columns (finest grain served)
-   * @param cntCol      summary column holding count(*) partials
-   * @param sums        base column -> summary column with sum partials
-   * @param mins        base column -> summary column with min partials
-   * @param maxs        base column -> summary column with max partials
-   * @param nns         base column -> summary column with count(col)
-   *                    (non-null) partials — serves count(c) and the
-   *                    avg(c) denominator
-   * @param timeGrains  summary column -> (base timestamp column,
-   *                    TRUNC level) where the summary column stores
-   *                    date_trunc(level, baseCol) — a query grouping
-   *                    by the SAME or a COARSER composable level is
-   *                    served by re-truncating the stored grain
-   *                    (hourly summary serves daily/monthly rollups)
-   */
-  final case class Params(
-      summaryPath: String,
-      groupCols: Seq[String],
-      cntCol: String,
-      sums: Map[String, String] = Map.empty,
-      mins: Map[String, String] = Map.empty,
-      maxs: Map[String, String] = Map.empty,
-      nns: Map[String, String] = Map.empty,
-      timeGrains: Map[String, (String, String)] = Map.empty)
-
-  private val entries =
-    new java.util.concurrent.ConcurrentHashMap[String, Params]()
-
-  def register(basePath: String, params: Params): Unit =
-    entries.put(normalize(basePath), params)
-  def unregister(basePath: String): Unit = entries.remove(normalize(basePath))
-  def lookup(basePath: String): Option[Params] =
-    Option(entries.get(normalize(basePath)))
-
-  private def normalize(p: String): String =
-    p.stripSuffix("/").replaceFirst("^file:", "")
-
-  /** Build (and write) the summary the catalog serves: one row per
-    * groupCols combination with count/sum/min/max partial states. The
-    * build is one map-side-partial hash aggregate over the base — the
-    * single full scan that all later rollup queries amortize. */
-  /** @param timeGrain optional (base ts column, trunc level, summary
-    *        column name): adds date_trunc(level, tsCol) to the
-    *        summary grain and registers it for grain-composing
-    *        queries. */
-  def buildSummary(spark: SparkSession, basePath: String,
-      summaryPath: String, groupCols: Seq[String],
-      statCols: Seq[String],
-      timeGrain: Option[(String, String, String)] = None): Params = {
-    import org.apache.spark.sql.functions._
-    val base = spark.read.parquet(basePath)
-    val groupExprs = groupCols.map(col) ++
-      timeGrain.map { case (ts, lvl, out) => date_trunc(lvl, col(ts)).as(out) }
-    val aggs =
-      count(lit(1)).as("cnt") +:
-      statCols.flatMap(c => Seq(
-        sum(col(c)).as(s"sum_$c"),
-        min(col(c)).as(s"min_$c"),
-        max(col(c)).as(s"max_$c"),
-        count(col(c)).as(s"nn_$c")))
-    base.groupBy(groupExprs: _*).agg(aggs.head, aggs.tail: _*)
-      .write.mode("overwrite").parquet(summaryPath)
-    Params(summaryPath, groupCols, "cnt",
-      sums = statCols.map(c => c -> s"sum_$c").toMap,
-      mins = statCols.map(c => c -> s"min_$c").toMap,
-      maxs = statCols.map(c => c -> s"max_$c").toMap,
-      nns = statCols.map(c => c -> s"nn_$c").toMap,
-      timeGrains = timeGrain.map { case (ts, lvl, out) =>
-        out -> (ts, lvl.toUpperCase(java.util.Locale.ROOT))
-      }.toMap)
-  }
-}
-
 class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private val rewritten = TreeNodeTag[Boolean]("graft.rollup.rewritten")
@@ -143,11 +132,11 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       defs(a.exprId)
     }
 
-  /** Peel Project/Filter down to a single parquet LogicalRelation,
+  /** Peel Project/Filter down to a single registered base scan,
     * collecting filter conditions (inlined to base attrs) and alias
     * definitions on the way. Any other node refuses. */
   private def strip(plan: LogicalPlan)
-      : Option[(Seq[Expression], String, Map[ExprId, Expression])] =
+      : Option[(Seq[Expression], RollupParams, Map[ExprId, Expression])] =
     plan match {
       case Project(pl, child) =>
         strip(child).map { case (cs, p, defs) =>
@@ -161,12 +150,7 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           (inline(cond, defs) +: cs, p, defs)
         }
       case lr: LogicalRelation =>
-        lr.relation match {
-          case fs: HadoopFsRelation =>
-            fs.location.rootPaths.headOption
-              .map(p => (Nil, p.toString, Map.empty[ExprId, Expression]))
-          case _ => None
-        }
+        RollupCatalog.lookup(lr).map(p => (Nil, p, Map.empty[ExprId, Expression]))
       case _ => None
     }
 
@@ -199,7 +183,7 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   /** Is this aggregate call servable from the registered partials? */
-  private def mergeable(params: RollupCatalog.Params)
+  private def mergeable(params: RollupParams)
       (ae: AggregateExpression): Boolean = ae match {
     case AggregateExpression(f, Complete, false, None, _) => f match {
       case Count(Seq(Literal(_, _))) => true
@@ -233,7 +217,7 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private final case class GrainCoarser(orig: TruncTimestamp, sCol: String)
     extends GroupMap
 
-  private def groupMapFor(params: RollupCatalog.Params)
+  private def groupMapFor(params: RollupParams)
       (e: Expression): Option[GroupMap] = e match {
     case a: AttributeReference if params.groupCols.contains(a.name) =>
       Some(PlainCol(a))
@@ -250,12 +234,12 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (RollupCatalog.isEmpty) plan else plan.transformDown {
     case agg @ Aggregate(groupExprs, resultExprs, child, _)
         if agg.getTagValue(rewritten).isEmpty =>
       val replaced = for {
-        (conds, path, defs) <- strip(child)
-        params <- RollupCatalog.lookup(path)
+        (conds, params, defs) <- strip(child)
         // query grouping (inlined): summary grain columns, or
         // same/coarser composable time truncations of a stored grain
         gMaps <- {
@@ -357,16 +341,5 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         out
       }
       replaced.getOrElse(agg)
-  }
-}
-
-object RollupRewrite {
-  /** Install the rewrite rule into a session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[RollupRewriteRule])) {
-      spark.experimental.extraOptimizations =
-        existing :+ new RollupRewriteRule(spark)
-    }
   }
 }

@@ -8,7 +8,20 @@ import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+
+/** `minThreshold` is the tightest cosine threshold the registered
+  * (bits, tables) grid point was recall-validated for: a query at a
+  * LOOSER threshold would silently lose borderline pairs (the
+  * S-curve thins near-threshold recall as θ grows), so the rule
+  * refuses to rewrite it — the query falls back to the exact join
+  * rather than returning an unvalidated approximation. */
+final case class SimJoinParams(
+    idCol: String, vecCol: String,
+    bitsPerTable: Int, nTables: Int, seed: Long,
+    maxBucket: Option[Int], minThreshold: Double = 0.0)
+
+object SimJoinCatalog extends PathRegistry[SimJoinParams]
 
 /**
  * Catalyst optimizer rule that turns a declarative cosine-threshold
@@ -41,30 +54,6 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
  * the rounded cosine in the join condition, and a 3-column projection
  * of (left id, right id, rounded cosine); anything else is left alone.
  */
-object SimJoinCatalog {
-  /** `minThreshold` is the tightest cosine threshold the registered
-    * (bits, tables) grid point was recall-validated for: a query at a
-    * LOOSER threshold would silently lose borderline pairs (the
-    * S-curve thins near-threshold recall as θ grows), so the rule
-    * refuses to rewrite it — the query falls back to the exact join
-    * rather than returning an unvalidated approximation. */
-  final case class Params(
-      idCol: String, vecCol: String,
-      bitsPerTable: Int, nTables: Int, seed: Long,
-      maxBucket: Option[Int], minThreshold: Double = 0.0)
-
-  private val entries =
-    new java.util.concurrent.ConcurrentHashMap[String, Params]()
-
-  def register(path: String, params: Params): Unit =
-    entries.put(normalize(path), params)
-  def unregister(path: String): Unit = entries.remove(normalize(path))
-  def lookup(path: String): Option[Params] = Option(entries.get(normalize(path)))
-
-  private def normalize(p: String): String =
-    p.stripSuffix("/").replaceFirst("^file:", "")
-}
-
 class SimJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private val rewritten = TreeNodeTag[Boolean]("graft.simjoin.rewritten")
@@ -100,28 +89,26 @@ class SimJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     } yield (lt, metric, scale, thr)
   }
 
+  /** The unique registered scan under `plan`: its root paths and entry. */
   private def relationOf(plan: LogicalPlan)
-      : Option[(LogicalRelation, String)] = {
+      : Option[(Seq[String], SimJoinParams)] = {
     val rels = plan.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          fs.location.rootPaths.headOption.map(p => lr -> p.toString)
-        case _ => None
-      }
+      case lr: LogicalRelation =>
+        SimJoinCatalog.lookup(lr).map(PathRegistry.rootsOf(lr) -> _)
     }.flatten
     if (rels.length == 1) rels.headOption else None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (SimJoinCatalog.isEmpty) plan else plan.transformDown {
     case proj @ Project(projectList,
         j @ Join(l, r, Inner, Some(cond), _))
         if proj.getTagValue(rewritten).isEmpty && projectList.length == 3 =>
       val replaced = for {
         (lt, metric, scale, threshold) <- splitCondition(cond)
-        (_, lPath) <- relationOf(l)
-        (_, rPath) <- relationOf(r)
-        if lPath == rPath
-        params <- SimJoinCatalog.lookup(lPath)
+        (lPaths, params) <- relationOf(l)
+        (rPaths, _) <- relationOf(r)
+        if lPaths == rPaths
         // only thresholds the registration was recall-validated for
         if threshold >= params.minThreshold
         // the id guard must be left.id < right.id on the registered id
@@ -151,7 +138,7 @@ class SimJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         // plan-construction API is private to Spark); outputs are
         // re-aliased to the original expression ids below, so the new
         // relation's ids never leak upward.
-        val base = spark.read.parquet(lPath)
+        val base = spark.read.parquet(lPaths: _*)
         val pairs = SimilarityJoin.lshCosinePairsBanded(
           base, params.idCol, params.vecCol,
           params.bitsPerTable, params.nTables, threshold,
@@ -167,16 +154,5 @@ class SimJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         renamed
       }
       replaced.getOrElse(proj)
-  }
-}
-
-object SimJoinRewrite {
-  /** Install the rewrite rule into a session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[SimJoinRewriteRule])) {
-      spark.experimental.extraOptimizations =
-        existing :+ new SimJoinRewriteRule(spark)
-    }
   }
 }

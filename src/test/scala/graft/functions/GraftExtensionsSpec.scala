@@ -1,12 +1,25 @@
 package graft.functions
 
 import graft.SparkFunSuite
+import graft.plans.GraftRules
 import org.apache.spark.sql.SparkSession
 
 /** The cluster deployment path: a session created with
   * `spark.sql.extensions=graft.functions.GraftExtensions` gets every
-  * function and the ANN rewrite rule with no imperative registration. */
+  * function and all nine plan rewrites with no imperative
+  * registration; `GraftFunctions.register` gives any other session the
+  * same nine, and neither seam ever adds a rule twice. */
 class GraftExtensionsSpec extends SparkFunSuite {
+
+  /** Each of the nine rule classes is present in `s` exactly once. */
+  private def assertEachRuleOnce(s: SparkSession): Unit = {
+    val rules = s.sessionState.optimizer.extendedOperatorOptimizationRules ++
+      s.experimental.extraOptimizations
+    val counts = GraftRules.all.map { case (cls, _) =>
+      cls.getSimpleName -> rules.count(cls.isInstance) }
+    assert(counts.size === 9 && counts.map(_._1).distinct.size === 9)
+    assert(counts.forall(_._2 == 1), counts.mkString(", "))
+  }
 
   test("extensions-configured session registers functions and the rewrite rule") {
     val base = spark // ensure shared context exists
@@ -37,14 +50,44 @@ class GraftExtensionsSpec extends SparkFunSuite {
         assert(ext.sessionState.functionRegistry.functionExists(
           org.apache.spark.sql.catalyst.FunctionIdentifier(name)), name)
       }
-      // the injected optimizer rule is present
-      val ruleNames = ext.sessionState.optimizer.extendedOperatorOptimizationRules
-        .map(_.getClass.getName) ++
-        ext.sessionState.optimizer.batches.flatMap(_.rules).map(_.getClass.getName)
-      assert(ruleNames.exists(_.contains("IvfRewriteRule")), ruleNames.mkString("\n"))
+      // all nine rewrites are injected, and register adds none of them again
+      assertEachRuleOnce(ext)
+      GraftFunctions.register(ext)
+      assertEachRuleOnce(ext)
+      // an injected rewrite fires and refuses in this session, with the
+      // exact answer either way: footer-only count(*) over a registered
+      // path, and the filtered count it must refuse
+      val dir = java.nio.file.Files.createTempDirectory("graft_ext_spec").toString
+      ext.range(1000).selectExpr("id", "id % 7 AS v").repartition(3)
+        .write.mode("overwrite").parquet(dir)
+      graft.plans.FooterCountCatalog.register(dir)
+      val fired = ext.sql(s"SELECT count(*) FROM parquet.`$dir`")
+      val firedPlan = fired.queryExecution.executedPlan.toString
+      assert(firedPlan.contains("MapPartitions") && !firedPlan.contains("Scan parquet"),
+        firedPlan)
+      assert(fired.head.getLong(0) === 1000L)
+      val refused = ext.sql(s"SELECT count(*) FROM parquet.`$dir` WHERE v = 3")
+      assert(refused.queryExecution.executedPlan.toString.contains("Scan parquet"))
+      assert(refused.head.getLong(0) === (0 until 1000).count(_ % 7 == 3).toLong)
     } finally {
       SparkSession.setActiveSession(base)
       SparkSession.setDefaultSession(base)
+    }
+  }
+
+  test("register from 8 threads at once appends each rewrite exactly once") {
+    // the shared session, and a new session that starts with no rules
+    for (s <- Seq(spark, spark.newSession())) {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      try {
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val done = (1 to 8).map(_ => pool.submit(new Runnable {
+          def run(): Unit = { start.await(); GraftFunctions.register(s) }
+        }))
+        start.countDown()
+        done.foreach(_.get())
+      } finally pool.shutdown()
+      assertEachRuleOnce(s)
     }
   }
 }

@@ -270,6 +270,18 @@ class DedupSpec extends SparkFunSuite {
       ((4L, 3L, 2L, 1L)))
   }
 
+  test("curation pipeline: a NULL-id document survives, quality is the last column") {
+    import spark.implicits._
+    val docs = Seq[(Option[Long], String, String)](
+      (Some(1L), "the cat and the hat sat on a mat with the other cat and a rat today here now", "en"),
+      (None, "a dog and the fox ran to the barn with the other dog and a hen this morning", "en")
+    ).toDF("doc_id", "text", "lang")
+    val out = CurationPipeline.curate(docs, "doc_id", "text", minQuality = 0.75)
+    assert(out.columns.toSeq === Seq("doc_id", "text", "lang", "quality"))
+    val kept = out.select("doc_id").collect().map(r => Option(r.get(0))).toSet
+    assert(kept === Set(Some(1L), None))
+  }
+
   test("contamination check: counts shared shingles per (train, eval) pair, hand-computed") {
     import spark.implicits._
     val train = Seq(

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkFunSuite
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
 
@@ -24,8 +25,8 @@ class ConstraintRewriteSpec extends SparkFunSuite {
       .repartition(1).write.mode("overwrite").parquet(d)
     d
   }
-  private lazy val installed: Unit = {
-    ConstraintRewriteRule.ensureRegistered(spark)
+  private lazy val registered: Unit = {
+    GraftFunctions.register(spark)
     ConstraintCatalog.registerUnique(dims, Seq("pk"))
     ConstraintCatalog.registerUnique(facts, Seq("fid"))
   }
@@ -36,7 +37,7 @@ class ConstraintRewriteSpec extends SparkFunSuite {
     df.queryExecution.optimizedPlan.collect { case j: Join => j }.nonEmpty
 
   test("DISTINCT over a superset of a unique key drops the Aggregate") {
-    installed
+    registered
     val df = spark.read.parquet(facts).select("fid", "v").distinct()
     assert(!hasAggregate(df), df.queryExecution.optimizedPlan.toString)
     assert(df.count() === 1000L)
@@ -50,7 +51,7 @@ class ConstraintRewriteSpec extends SparkFunSuite {
   }
 
   test("DISTINCT survives filters; refuses without the key in scope") {
-    installed
+    registered
     val filtered = spark.read.parquet(facts)
       .filter(col("v") > 10).select("fid", "fk").distinct()
     assert(!hasAggregate(filtered))
@@ -61,8 +62,29 @@ class ConstraintRewriteSpec extends SparkFunSuite {
       (0L until 1000L).map(i => (i % 300, (i * 13) % 97)).distinct.size)
   }
 
+  test("DISTINCT over the keyed table plus a copy keeps the Aggregate") {
+    registered
+    val want = spark.read.parquet(facts).select("fid", "v")
+      .orderBy("fid").collect().toSeq
+    def copyOfFacts(): String = {
+      val d = java.nio.file.Files.createTempDirectory("graft_fact_copy").toString
+      spark.read.parquet(facts).write.mode("overwrite").parquet(d)
+      d
+    }
+    // an unregistered copy: the union holds every row twice
+    val copy = copyOfFacts()
+    // a separately keyed copy: two unique keys are not a key of the union
+    val keyedCopy = copyOfFacts()
+    ConstraintCatalog.registerUnique(keyedCopy, Seq("fid"))
+    for (other <- Seq(copy, keyedCopy)) {
+      val df = spark.read.parquet(facts, other).select("fid", "v").distinct()
+      assert(hasAggregate(df), df.queryExecution.optimizedPlan.toString)
+      assert(df.orderBy("fid").collect().toSeq === want)
+    }
+  }
+
   test("LEFT JOIN to an unreferenced unique dimension is deleted") {
-    installed
+    registered
     val f = spark.read.parquet(facts)
     val d = spark.read.parquet(dims)
     val joined = f.join(d, f("fk") === d("pk"), "left_outer")
@@ -74,7 +96,7 @@ class ConstraintRewriteSpec extends SparkFunSuite {
   }
 
   test("aggregate directly over the join (CollapseProject shape) also fires") {
-    installed
+    registered
     val f = spark.read.parquet(facts)
     val d = spark.read.parquet(dims)
     val agg = f.join(d, f("fk") === d("pk"), "left_outer")
@@ -86,7 +108,7 @@ class ConstraintRewriteSpec extends SparkFunSuite {
   }
 
   test("join elimination refuses: referenced dim column, non-unique key, inner join") {
-    installed
+    registered
     val f = spark.read.parquet(facts)
     val d = spark.read.parquet(dims)
     // dim column referenced -> join stays
@@ -115,7 +137,7 @@ class ConstraintRewriteSpec extends SparkFunSuite {
   }
 
   test("fk inner-join elimination: fires with a registered verified fk") {
-    installed
+    registered
     ConstraintCatalog.registerForeignKey(containedFacts, "fk", dims, "pk")
     val f = spark.read.parquet(containedFacts)
     val d = spark.read.parquet(dims)
@@ -128,7 +150,7 @@ class ConstraintRewriteSpec extends SparkFunSuite {
   }
 
   test("fk inner-join elimination refuses: parent filter, dim ref, wrong pk") {
-    installed
+    registered
     ConstraintCatalog.registerForeignKey(containedFacts, "fk", dims, "pk")
     val f = spark.read.parquet(containedFacts)
     val d = spark.read.parquet(dims)

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkFunSuite
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** Footer-only count(*) rewrite: exact counts without a data scan,
@@ -9,17 +10,18 @@ import org.apache.spark.sql.functions._
 class FooterCountRewriteSpec extends SparkFunSuite {
   import spark.implicits._
 
-  private lazy val installed: Unit = FooterCountRewrite.install(spark)
+  private lazy val registered: Unit = GraftFunctions.register(spark)
 
   private def writeStore(n: Int, parts: Int): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_fc_spec").toString
-    spark.range(n.toLong).select(col("id"), (col("id") % 7).as("v"))
+    spark.range(n.toLong).select(col("id"), (col("id") % 7).as("v"),
+      when(col("id") % 5 =!= 0, col("id")).as("w")) // NULL every 5th row
       .repartition(parts).write.mode("overwrite").parquet(dir)
     dir
   }
 
   test("registered unfiltered count(*): exact, and no parquet data scan") {
-    installed
+    registered
     val dir = writeStore(12345, 4)
     FooterCountCatalog.register(dir)
     val df = spark.sql(s"SELECT count(*) AS n FROM parquet.`$dir`")
@@ -30,7 +32,7 @@ class FooterCountRewriteSpec extends SparkFunSuite {
   }
 
   test("count(1) through a column-pruning projection also fires") {
-    installed
+    registered
     val dir = writeStore(999, 2)
     FooterCountCatalog.register(dir)
     val df = spark.read.parquet(dir).select("v").agg(count(lit(1)).as("n"))
@@ -39,23 +41,48 @@ class FooterCountRewriteSpec extends SparkFunSuite {
   }
 
   test("refusals: filter, count(col), distinct, grouping, unregistered") {
-    installed
+    registered
     val dir = writeStore(500, 2)
     FooterCountCatalog.register(dir)
     val t = spark.read.parquet(dir)
     val refused = Seq(
       t.filter(col("v") > 2).agg(count(lit(1))),          // filtered
-      t.agg(count(col("v"))),                             // null semantics
       t.agg(countDistinct(col("v"))),                     // distinct
       t.groupBy("v").agg(count(lit(1))))                  // grouped
     refused.foreach { df =>
       val phys = df.queryExecution.executedPlan.toString
       assert(phys.contains("Scan parquet"), s"should have scanned:\n$phys")
     }
+    // count(col) has null semantics the row count cannot answer: the
+    // footer-count rule itself leaves the plan untouched (it does
+    // rewrite count(1) over the same scan), and the session's answer
+    // (the footer-stats rule may serve it from null_count) is the exact
+    // non-null count, not num_rows
+    val rule = new FooterCountRule(spark)
+    def untouched(df: org.apache.spark.sql.DataFrame) = {
+      val plan = df.queryExecution.analyzed
+      rule.apply(plan) eq plan
+    }
+    assert(!untouched(t.agg(count(lit(1)))), "count(1) not rewritten")
+    assert(untouched(t.agg(count(col("w")))), "count(col) rewritten")
+    assert(t.agg(count(col("w"))).collect().head.getLong(0) === 400L)
     val other = writeStore(77, 1) // never registered
     val df = spark.read.parquet(other).agg(count(lit(1)).as("n"))
     assert(df.queryExecution.executedPlan.toString.contains("Scan parquet"))
     assert(df.collect().head.getLong(0) === 77L)
+  }
+
+  test("several root paths: footers only when every one is registered") {
+    registered
+    val (a, b, c) = (writeStore(300, 2), writeStore(200, 1), writeStore(100, 1))
+    FooterCountCatalog.register(a)
+    FooterCountCatalog.register(b)
+    val both = spark.read.parquet(a, b).agg(count(lit(1)))
+    assert(!both.queryExecution.executedPlan.toString.contains("Scan parquet"))
+    assert(both.collect().head.getLong(0) === 500L)
+    val partly = spark.read.parquet(a, c).agg(count(lit(1)))
+    assert(partly.queryExecution.executedPlan.toString.contains("Scan parquet"))
+    assert(partly.collect().head.getLong(0) === 400L)
   }
 
   test("footerRows: exact per file; garbage and truncated files → None") {
@@ -76,7 +103,7 @@ class FooterCountRewriteSpec extends SparkFunSuite {
   }
 
   test("corrupt footer fails the query loudly, never undercounts") {
-    installed
+    registered
     val dir = writeStore(50, 1)
     // infer schema and build the FileIndex while the file is intact —
     // the corruption below is then first seen by OUR footer read

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkFunSuite
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** Footer-statistics min/max rewrite: exact answers with no data
@@ -8,7 +9,7 @@ import org.apache.spark.sql.functions._
 class FooterStatsRewriteSpec extends SparkFunSuite {
   import spark.implicits._
 
-  private lazy val installed: Unit = FooterStatsRewrite.install(spark)
+  private lazy val registered: Unit = GraftFunctions.register(spark)
 
   private def write(df: org.apache.spark.sql.DataFrame, parts: Int): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_fs_spec").toString
@@ -18,7 +19,7 @@ class FooterStatsRewriteSpec extends SparkFunSuite {
   }
 
   test("min/max/count mix: exact from footers, no parquet data scan") {
-    installed
+    registered
     val dir = write(spark.range(1000, 8000).select(
       col("id"), (col("id") % 321).cast("int").as("v")), 4)
     val df = spark.read.parquet(dir).agg(
@@ -35,7 +36,7 @@ class FooterStatsRewriteSpec extends SparkFunSuite {
   }
 
   test("nulls are skipped exactly; an all-null column yields NULL") {
-    installed
+    registered
     val base = spark.range(100).select(col("id"),
       when(col("id") % 2 === 0, col("id") * 3).as("evens"),
       lit(null).cast("long").as("void"))
@@ -50,7 +51,7 @@ class FooterStatsRewriteSpec extends SparkFunSuite {
   }
 
   test("max(ts)/min(date): the freshness card answers from footers") {
-    installed
+    registered
     val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     try {
@@ -79,7 +80,7 @@ class FooterStatsRewriteSpec extends SparkFunSuite {
   }
 
   test("INT96 timestamps refuse loudly rather than mis-decode") {
-    installed
+    registered
     val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
     try {
@@ -99,7 +100,7 @@ class FooterStatsRewriteSpec extends SparkFunSuite {
   }
 
   test("count(col) from null_count: exact with nulls, strings included") {
-    installed
+    registered
     val base = spark.range(200).select(col("id"),
       when(col("id") % 3 === 0, concat(lit("s"), col("id"))).as("s"),
       when(col("id") % 5 =!= 0, col("id")).as("gaps"))
@@ -115,7 +116,7 @@ class FooterStatsRewriteSpec extends SparkFunSuite {
   }
 
   test("count over an array column is refused (values ≠ rows)") {
-    installed
+    registered
     val dir = write(spark.range(10).select(col("id"),
       array(col("id"), col("id") + 1).as("arr")), 1)
     val df = spark.read.parquet(dir).agg(count(col("arr")))
@@ -124,7 +125,7 @@ class FooterStatsRewriteSpec extends SparkFunSuite {
   }
 
   test("results match the scan plan on every file layout") {
-    installed
+    registered
     for (parts <- Seq(1, 2, 7)) {
       val dir = write(spark.range(500).select(
         ((col("id") * 37) % 101 - 50).as("x")), parts)
@@ -135,7 +136,7 @@ class FooterStatsRewriteSpec extends SparkFunSuite {
   }
 
   test("refusals: filter, float (NaN hazard), string, grouped, mixed-unknown") {
-    installed
+    registered
     val dir = write(spark.range(100).select(col("id"),
       col("id").cast("double").as("d"),
       concat(lit("s"), col("id")).as("s")), 2)

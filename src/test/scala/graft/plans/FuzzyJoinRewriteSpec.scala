@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkFunSuite
+import graft.functions.GraftFunctions
 
 /** Fuzzy-join SQL rewrite: fires on the registered naive shape and
   * matches the exact join bit for bit; refuses unregistered stores and
@@ -28,12 +29,12 @@ class FuzzyJoinRewriteSpec extends SparkFunSuite {
        |ORDER BY a_id, b_id""".stripMargin
 
   test("registered dist<=1 query rewrites (no nested-loop join) and stays exact") {
-    // ground truth BEFORE installing the rule
+    // ground truth BEFORE registering the store
     val exact = spark.sql(naiveSql(1)).collect().toSeq
     assert(exact.nonEmpty)
-    FuzzyJoinRewrite.install(spark)
+    GraftFunctions.register(spark)
     FuzzyJoinCatalog.register(storePath,
-      FuzzyJoinCatalog.Params("id", "name", blockKeyLen = 8, maxBucket = None))
+      FuzzyJoinParams("id", "name", blockKeyLen = 8, maxBucket = None))
     try {
       val rewritten = spark.sql(naiveSql(1))
       val plan = rewritten.queryExecution.executedPlan.toString
@@ -44,9 +45,9 @@ class FuzzyJoinRewriteSpec extends SparkFunSuite {
   }
 
   test("dist<=2 exceeds the losslessness contract: NOT rewritten") {
-    FuzzyJoinRewrite.install(spark)
+    GraftFunctions.register(spark)
     FuzzyJoinCatalog.register(storePath,
-      FuzzyJoinCatalog.Params("id", "name", blockKeyLen = 8, maxBucket = None))
+      FuzzyJoinParams("id", "name", blockKeyLen = 8, maxBucket = None))
     try {
       val plan = spark.sql(naiveSql(2)).queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastNestedLoopJoin") ||
@@ -55,7 +56,7 @@ class FuzzyJoinRewriteSpec extends SparkFunSuite {
   }
 
   test("unregistered store: NOT rewritten") {
-    FuzzyJoinRewrite.install(spark)
+    GraftFunctions.register(spark)
     val plan = spark.sql(naiveSql(1)).queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("CartesianProduct"))

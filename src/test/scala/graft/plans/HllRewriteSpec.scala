@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkFunSuite
+import graft.functions.GraftFunctions
 import graft.operators.HyperLogLog
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -20,7 +21,7 @@ class HllRewriteSpec extends SparkFunSuite {
     (0 until 5000).map(i => (s"g${i % 4}", s"user-${i % 1499}", i.toLong))
       .toDF("grp", "uid", "v")
       .write.mode("overwrite").parquet(p)
-    HllRewrite.install(spark)
+    GraftFunctions.register(spark)
     p
   }
 
@@ -54,7 +55,7 @@ class HllRewriteSpec extends SparkFunSuite {
       // at least one group differs from exact (all four matching the
       // exact counts would mean the rewrite never fired)
       assert(got.exists { case (g, est) => est != exact(g) }, (got, exact))
-    } finally HllCatalog.deregister(path)
+    } finally HllCatalog.unregister(path)
   }
 
   test("unregistered path keeps the exact distinct aggregate") {
@@ -97,7 +98,7 @@ class HllRewriteSpec extends SparkFunSuite {
           r.getAs[Long]("v_zero"), r.getAs[Double]("est_distinct")))
         .toMap
       assert(filtered === refF)
-    } finally HllCatalog.deregister(path)
+    } finally HllCatalog.unregister(path)
   }
 
   test("small range: linear counting makes few-distinct groups near-exact") {
@@ -119,7 +120,7 @@ class HllRewriteSpec extends SparkFunSuite {
       assert(df4.queryExecution.optimizedPlan.toString.contains("__hll_bucket"))
       val got4 = df4.collect().head.getLong(0)
       assert(math.abs(got4 - 4L) <= 1, got4)
-    } finally HllCatalog.deregister(p)
+    } finally HllCatalog.unregister(p)
   }
 
   test("empty input: ungrouped rewritten count(DISTINCT) returns 0, not NULL") {
@@ -131,7 +132,7 @@ class HllRewriteSpec extends SparkFunSuite {
       assert(df.queryExecution.optimizedPlan.toString.contains("__hll_bucket"))
       val row = df.collect().head
       assert(!row.isNullAt(0) && row.getLong(0) === 0L, row)
-    } finally HllCatalog.deregister(path)
+    } finally HllCatalog.unregister(path)
   }
 
   test("rewritten plan sheds the distinct expand: register aggregate instead") {
@@ -142,6 +143,6 @@ class HllRewriteSpec extends SparkFunSuite {
       val plan = df.queryExecution.optimizedPlan.toString
       assert(plan.contains("__hll_bucket"), plan)
       assert(plan.contains("md5"), plan)
-    } finally HllCatalog.deregister(path)
+    } finally HllCatalog.unregister(path)
   }
 }

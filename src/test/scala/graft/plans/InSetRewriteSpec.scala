@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkFunSuite
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** Broadcast IN-list rewrite: result identity against the inline
@@ -9,10 +10,10 @@ import org.apache.spark.sql.functions._
 class InSetRewriteSpec extends SparkFunSuite {
   import spark.implicits._
 
-  private lazy val installed: Unit = InSetBroadcastRule.install(spark)
+  private lazy val registered: Unit = GraftFunctions.register(spark)
 
   test("rewritten IN list: identical rows, set absent from the plan") {
-    installed
+    registered
     val ids = (0 until 3000).map(i => (i * 3 + 1).toLong)
     val base = spark.range(10000).select(col("id"),
       (col("id") % 17).as("v"))
@@ -29,7 +30,7 @@ class InSetRewriteSpec extends SparkFunSuite {
   }
 
   test("string keys probe exactly too") {
-    installed
+    registered
     val keys = (0 until 1500).map(i => s"k$i")
     val df = spark.range(4000)
       .select(concat(lit("k"), col("id")).as("s"))
@@ -39,7 +40,7 @@ class InSetRewriteSpec extends SparkFunSuite {
   }
 
   test("below threshold and null-bearing lists keep the exact inline form") {
-    installed
+    registered
     val small = spark.range(100).filter(col("id").isin((0L until 50L): _*))
     assert(!small.queryExecution.executedPlan.toString
       .contains("in_set_broadcast"))
@@ -56,12 +57,29 @@ class InSetRewriteSpec extends SparkFunSuite {
   }
 
   test("rewritten filter result equals the un-rewritten session's result") {
-    installed
+    registered
     val ids = (0 until 2000).map(i => (i * 7 + 3).toLong)
     val a = spark.range(20000).filter(col("id").isin(ids: _*))
       .orderBy("id").as[Long].collect().toSeq
     // ground truth, computed without Spark
     val want = ids.filter(_ < 20000).sorted
     assert(a === want)
+  }
+
+  test("cache eviction by another session keeps an already-planned query valid") {
+    registered
+    val ids = (0 until 1500).map(i => (i * 5).toLong)
+    val planned = spark.range(10000).filter(col("id").isin(ids: _*))
+    assert(planned.queryExecution.executedPlan.toString.contains("in_set_broadcast"))
+    // a second session plans more distinct lists than the cache holds,
+    // so the cache evicts the entry the first session's plan refers to
+    val other = spark.newSession()
+    GraftFunctions.register(other)
+    (1 to 70).foreach { k =>
+      val list = (0 until InSetBroadcastRule.Threshold).map(i => (i * 100 + k).toLong)
+      val df = other.range(10).filter(col("id").isin(list: _*))
+      assert(df.queryExecution.optimizedPlan.toString.contains("in_set_broadcast"))
+    }
+    assert(planned.collect().toSeq.map(_.longValue) === ids)
   }
 }

@@ -22,7 +22,6 @@ class IvfRewriteSpec extends SparkFunSuite {
 
   private def topkSql(): DataFrame = {
     GraftFunctions.register(spark)
-    IvfRewrite.install(spark)
     spark.read.parquet(storePath).createOrReplaceTempView("ivf_store")
     spark.sql(
       """SELECT vec_id, round(knn_cosine_similarity(embedding, :qv), 6) AS score
@@ -60,7 +59,6 @@ class IvfRewriteSpec extends SparkFunSuite {
     IvfIndexCatalog.register(storePath, model, searchTopSize = 1)
     try {
       GraftFunctions.register(spark)
-      IvfRewrite.install(spark)
       spark.read.parquet(storePath).createOrReplaceTempView("ivf_store")
       val df = spark.sql(
         """SELECT vec_id, round(knn_cosine_similarity(embedding, :qv), 6) AS score

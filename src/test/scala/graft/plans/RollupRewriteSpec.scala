@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkFunSuite
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.DataFrame
 
 /** Materialized-rollup rewrite: merge-closed aggregates over a
@@ -23,7 +24,7 @@ class RollupRewriteSpec extends SparkFunSuite {
     p
   }
 
-  private lazy val params: RollupCatalog.Params = {
+  private lazy val params: RollupParams = {
     val sp = java.nio.file.Files.createTempDirectory("rollup_rw_sum").toString
     val p = RollupCatalog.buildSummary(spark, basePath, sp,
       Seq("lang", "source"), Seq("n_chars", "score", "opt"))
@@ -38,7 +39,7 @@ class RollupRewriteSpec extends SparkFunSuite {
     df.queryExecution.executedPlan.toString.contains("rollup_rw_base")
 
   private def withRegistered[T](f: => T): T = {
-    RollupRewrite.install(spark)
+    GraftFunctions.register(spark)
     RollupCatalog.register(basePath, params)
     try f finally RollupCatalog.unregister(basePath)
   }
@@ -138,8 +139,24 @@ class RollupRewriteSpec extends SparkFunSuite {
     }
   }
 
+  test("registered base read together with an unregistered copy: NOT rewritten") {
+    val copy = java.nio.file.Files.createTempDirectory("rollup_rw_copy").toString
+    spark.read.parquet(basePath).write.mode("overwrite").parquet(copy)
+    def both(): DataFrame = {
+      spark.read.parquet(basePath, copy).createOrReplaceTempView("rollup_rw_both")
+      spark.sql("""SELECT lang, count(*) AS n, sum(n_chars) AS total
+                  |FROM rollup_rw_both GROUP BY lang ORDER BY lang""".stripMargin)
+    }
+    val exact = both().collect().toSeq
+    withRegistered {
+      val df = both()
+      assert(scansBase(df), df.queryExecution.executedPlan.toString)
+      assert(df.collect().toSeq === exact)
+    }
+  }
+
   test("unregistered base: NOT rewritten") {
-    RollupRewrite.install(spark)
+    GraftFunctions.register(spark)
     assert(scansBase(sql(
       "SELECT lang, count(*) AS n FROM BASE GROUP BY lang")))
   }
@@ -158,14 +175,14 @@ class RollupRewriteSpec extends SparkFunSuite {
     p
   }
 
-  private lazy val tsParams: RollupCatalog.Params = {
+  private lazy val tsParams: RollupParams = {
     val sp = java.nio.file.Files.createTempDirectory("rollup_rw_tssum").toString
     RollupCatalog.buildSummary(spark, tsBasePath, sp, Seq("typ"),
       Seq("cents"), timeGrain = Some(("ts", "HOUR", "grain_hour")))
   }
 
   private def withTsRegistered[T](f: => T): T = {
-    RollupRewrite.install(spark)
+    GraftFunctions.register(spark)
     RollupCatalog.register(tsBasePath, tsParams)
     try f finally RollupCatalog.unregister(tsBasePath)
   }

@@ -14,13 +14,12 @@ class SimJoinRewriteSpec extends SparkFunSuite {
     p
   }
 
-  private val params = SimJoinCatalog.Params(
+  private val params = SimJoinParams(
     "vec_id", "embedding", bitsPerTable = 4, nTables = 64,
     seed = 42L, maxBucket = Some(1024))
 
   private def naiveSql(): DataFrame = {
     GraftFunctions.register(spark)
-    SimJoinRewrite.install(spark)
     spark.sql(
       s"""SELECT a.vec_id AS a_id, b.vec_id AS b_id,
          |       round(knn_cosine_similarity(a.embedding, b.embedding), 6) AS cos_sim
@@ -47,7 +46,6 @@ class SimJoinRewriteSpec extends SparkFunSuite {
 
   test("a query below the validated threshold is NOT rewritten") {
     GraftFunctions.register(spark)
-    SimJoinRewrite.install(spark)
     SimJoinCatalog.register(storePath, params.copy(minThreshold = 0.4))
     try {
       val loose = spark.sql(
@@ -68,7 +66,6 @@ class SimJoinRewriteSpec extends SparkFunSuite {
     SimJoinCatalog.register(storePath, params)
     try {
       GraftFunctions.register(spark)
-      SimJoinRewrite.install(spark)
       val other = spark.sql(
         s"""SELECT a.vec_id AS a_id, b.vec_id AS b_id
            |FROM parquet.`$storePath` a JOIN parquet.`$storePath` b

@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.plans.{FuzzyJoinCatalog, FuzzyJoinRewrite}
+import graft.functions.GraftFunctions
+import graft.plans.{FuzzyJoinCatalog, FuzzyJoinParams}
 import org.apache.spark.sql.functions._
 
 /**
@@ -55,9 +56,9 @@ object FuzzyRewriteProbe {
 
       // exact plan first (skip at sf0.1 unless asked: 200M lev pairs)
       if (sf == "0.01" || args.contains("--naive-large")) time("naive")
-      FuzzyJoinRewrite.install(spark)
+      GraftFunctions.register(spark)
       FuzzyJoinCatalog.register(path,
-        FuzzyJoinCatalog.Params("id", "name", blockKeyLen = 8,
+        FuzzyJoinParams("id", "name", blockKeyLen = 8,
           maxBucket = Some(1024)))
       time("rewritten")
       time("rewritten") // hot

@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.plans.{RollupCatalog, RollupRewrite}
+import graft.functions.GraftFunctions
+import graft.plans.RollupCatalog
 
 /**
  * Offline probe (not a test): measures the materialized-rollup
@@ -53,7 +54,7 @@ object RollupRewriteProbe {
       println(f"[rollup-probe] sf$sf summary build (the one amortized scan): ${buildS}%.2f s")
       time("naive")
       time("naive")
-      RollupRewrite.install(spark)
+      GraftFunctions.register(spark)
       RollupCatalog.register(base, params)
       time("rewritten")
       time("rewritten")

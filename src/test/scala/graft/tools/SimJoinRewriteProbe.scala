@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.GraftSession
 import graft.functions.GraftFunctions
-import graft.plans.{SimJoinCatalog, SimJoinRewrite}
+import graft.plans.{SimJoinCatalog, SimJoinParams}
 
 /**
  * Measurement harness behind SCALING.md's SQL-rewrite note: times the
@@ -18,7 +18,6 @@ object SimJoinRewriteProbe {
     val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.register(spark)
-    SimJoinRewrite.install(spark)
     // "synth<N>" builds N LshScaleProbe shards (N×2,000 rows) and
     // registers at the SCALING.md sizing rule's bit count for that n
     // (6 bits at 2k, +3 per 10×); brute force runs ONCE (n²/2 pairs).
@@ -53,7 +52,7 @@ object SimJoinRewriteProbe {
     }
 
     val (brute, bruteRows) = time(reps)
-    SimJoinCatalog.register(path, SimJoinCatalog.Params(
+    SimJoinCatalog.register(path, SimJoinParams(
       "vec_id", "embedding", bitsPerTable = bits, nTables = 64,
       seed = 42L, maxBucket = Some(1024), minThreshold = 0.4))
     try {
